@@ -21,7 +21,7 @@ Embedding-cosine near-dup lives in ``similarity.py``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
@@ -551,11 +551,11 @@ def greedy_accept_order(doc_ids: list[int], edges: list[tuple[int, int]]) -> set
 # ---------------------------------------------------- duplicate clustering
 
 
-#: min-label propagation steps fused into one plan per materialization +
-#: change-count round (see the STEP FUSION note in connected_components).
-#: Measured at sf0.1 (round 11): the per-round wall is the fixed
-#: job/checkpoint/count floor, so halving the round count wins even
-#: though each round's plan carries two edge joins.
+#: min-label propagation steps fused into one plan per materialized
+#: round (see the STEP FUSION note in connected_components). Measured at
+#: sf0.1 (round 11): the per-round wall is the fixed job/checkpoint
+#: floor, so halving the round count wins even though each round's plan
+#: carries two edge joins.
 CC_STEPS_PER_ROUND = 2
 
 
@@ -573,9 +573,11 @@ def connected_components(
     rounds (near-dup graphs are clique-ish -> 2-3 rounds).
 
     Returns (node, component) with component = min node id reachable.
-    Each round is one shuffle join + one aggregate; the loop stops early
-    when no label changes (driver-side count — the standard Spark CC
-    pattern, cf. GraphX/GraphFrames which do the same under the hood).
+    Each step is one shuffle join + one aggregate; ``max_iter`` bounds the
+    steps (rounded up to whole rounds of ``CC_STEPS_PER_ROUND``). The loop
+    stops once a step changes no label (the change count is observed on
+    the round's checkpoint — the standard Spark CC early exit, cf.
+    GraphX/GraphFrames) and raises if ``max_iter`` steps do not converge.
 
     ``pre_normalized``: the input is already the MATERIALIZED distinct
     lo<hi edge set (graph_store.store_edges — parquet-backed), so the
@@ -607,10 +609,10 @@ def connected_components(
         edges.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
     )
 
-    def _propagate(lbl: DataFrame, carry: list[str]) -> DataFrame:
+    def _propagate(lbl: DataFrame) -> DataFrame:
         """One min-label step: label <- min(label, min over neighbors).
-        ``carry`` columns ride along untouched (the round-start label,
-        so the change count needs no extra join)."""
+        ``label0`` keeps the step-start label, so the step's change count
+        needs no extra join."""
         nbr = (
             edges.join(lbl, edges.d == lbl.node)
             .groupBy("s")
@@ -621,7 +623,7 @@ def connected_components(
             F.least(
                 F.col("label"), F.coalesce("nbr_label", F.col("label"))
             ).alias("label"),
-            *carry,
+            F.col("label").alias("label0"),
         )
 
     # NOTE (round 10): pointer-jumping (label <- label[label] via a
@@ -636,29 +638,37 @@ def connected_components(
     # measured deep-chain workload.
     #
     # STEP FUSION (round 11): the per-round wall at sf0.1 is the fixed
-    # job/checkpoint/count floor, not the join compute (8-vs-32-core
-    # scaling ratio ~1 for every CC consumer), so run CC_STEPS_PER_ROUND
-    # propagation steps inside ONE plan per materialization + change
-    # count. Exactness: labels decrease monotonically, so "no change
-    # across a fused round" still certifies the fixpoint (if any inner
-    # step changed a label, the round's end state differs from its
-    # start), and running extra steps past the fixpoint is a no-op —
-    # final labels are bit-identical to single-stepping.
+    # job/checkpoint floor, not the join compute (8-vs-32-core scaling
+    # ratio ~1 for every CC consumer), so run CC_STEPS_PER_ROUND
+    # propagation steps inside ONE plan per materialization. Measured on
+    # a 4-core host at sf0.01: a 1-step round launches 5-7 Spark jobs, a
+    # fused 2-step round 8-9.
+    #
+    # CHANGE COUNT: every step re-aliases ``label0`` to its input label,
+    # so the count observed on the round's checkpoint is the LAST step's
+    # change count. A step is a pure function of the labels, so a
+    # step that changes nothing proves the labels are the fixpoint: the
+    # loop stops on the round whose last step was a no-op instead of
+    # running a whole extra all-zero round to certify it, and the final
+    # labels are bit-identical to single-stepping. The count rides on the
+    # checkpoint action itself (``observe``), which removes the separate
+    # ``filter(label != label0).count()`` action (2 Spark jobs / 3 tasks
+    # per round, same host); an empty label set observes 0.
     changed = 0
     prev_ckpt = None
     rounds = -(-max_iter // CC_STEPS_PER_ROUND)
-    for _ in range(rounds):
-        stepped = labels.withColumn("label0", F.col("label"))
+    for r in range(rounds):
+        stepped = labels
         for _s in range(CC_STEPS_PER_ROUND):
-            stepped = _propagate(stepped, ["label0"])
-        # checkpoint BEFORE the change count: the count and the next
-        # round both read the materialized blocks, so the propagation
-        # joins execute once per round, not twice (count-then-checkpoint
-        # re-ran them). The superseded round's blocks are freed once the
-        # new checkpoint exists — a long loop would otherwise pin
-        # O(rounds) corpus-sized label copies in the block manager.
-        new_labels = stepped.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("label") != F.col("label0")).count()
+            stepped = _propagate(stepped)
+        obs = Observation()
+        # the superseded round's blocks are freed once the new checkpoint
+        # exists — a long loop would otherwise pin O(rounds) corpus-sized
+        # label copies in the block manager
+        new_labels = stepped.observe(
+            obs, F.count_if(F.col("label") != F.col("label0")).alias("changed")
+        ).localCheckpoint(eager=True)
+        changed = obs.get["changed"]
         if prev_ckpt is not None:
             _free_local_checkpoint(prev_ckpt)
         prev_ckpt = new_labels
@@ -667,10 +677,12 @@ def connected_components(
             break
     if changed != 0:
         # returning partial labels would silently split components (graph
-        # diameter > max_iter); callers must see the failure, not wrong data
+        # diameter > propagation steps); callers must see the failure,
+        # not wrong data
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter"
+            f"connected_components did not converge in "
+            f"{(r + 1) * CC_STEPS_PER_ROUND} propagation steps "
+            f"({changed} labels changed in the last step); raise max_iter"
         )
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
